@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
 import graft.etl.{Metrics, Normalize}
+import graft.plans.GraftExtensions
 import graft.queries.{CurationQueries, DedupQueries, EmbeddingQueries, LakehouseQueries, MediaQueries, OperatorQueries, ParityQueries, StarQueries, StreamQueries, TextQueries}
 import graft.sources.MockUserSource
 
@@ -20,12 +21,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Metrics.compute(Normalize(MockUserSource.rawUsers(spark)))
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each query
+    * first installs the native functions, so it also runs in a session
+    * that was not built by [[GraftSession]].
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ParityQueries.queries ++ StarQueries.queries ++ DedupQueries.queries ++
+    (ParityQueries.queries ++ StarQueries.queries ++ DedupQueries.queries ++
       TextQueries.queries ++ EmbeddingQueries.queries ++
       StreamQueries.queries ++ MediaQueries.queries ++ OperatorQueries.queries ++
-      CurationQueries.queries ++ LakehouseQueries.queries
+      CurationQueries.queries ++ LakehouseQueries.queries).map { case (name, fn) =>
+      name -> { (s: SparkSession, dir: String) => GraftExtensions.install(s); fn(s, dir) }
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 /** SQL-callable wrappers for Spark's own runtime-filter bloom expressions.
   *
@@ -11,8 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   * AQE runtime-filter injection but does NOT register them in the public
   * function registry — so an EXPLICIT semi-join prune (build a bloom over
   * the selective build side, drop fact rows that cannot join *before* the
-  * fact shuffle) isn't writable as SQL out of the box. These wrappers make
-  * the pattern first-class:
+  * fact shuffle) isn't writable as SQL out of the box. Two entries of the
+  * `graft.plans.GraftExtensions` table make the pattern first-class:
   *
   *   graft_bloom_agg(xxhash64(k) [, estItems])  →  binary bloom filter
   *   graft_might_contain(bf, xxhash64(k))       →  boolean (no false negatives)
@@ -26,35 +23,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   */
 object BloomFunctions {
 
-  /** The (identifier, info, builder) triples — the single source both
-    * registration paths share (ADVICE r5: the per-session registry and
-    * GraftExtensions.injectFunction previously each carried a copy of
-    * the arity-dispatch block, free to drift silently).
-    */
-  val registrations: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
-    Seq(
-      (
-        FunctionIdentifier("graft_bloom_agg"),
-        new ExpressionInfo(classOf[BloomFilterAggregate].getName, "graft_bloom_agg"),
-        (children: Seq[Expression]) =>
-          children match {
-            case Seq(c) => new BloomFilterAggregate(c)
-            case Seq(c, est) => new BloomFilterAggregate(c, est)
-            case other =>
-              throw new IllegalArgumentException(
-                s"graft_bloom_agg expects 1 or 2 args, got ${other.size}")
-          }
-      ),
-      (
-        FunctionIdentifier("graft_might_contain"),
-        new ExpressionInfo(classOf[BloomFilterMightContain].getName, "graft_might_contain"),
-        (children: Seq[Expression]) => BloomFilterMightContain(children(0), children(1))
-      )
-    )
-
-  /** Idempotent session registration (mirrors SketchExpressions.register). */
-  def register(spark: SparkSession): Unit =
-    registrations.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
+  /** Idempotent registration of every native function; see
+    * [[graft.plans.GraftExtensions.install]]. */
+  def register(spark: SparkSession): Unit = graft.plans.GraftExtensions.install(spark)
 }

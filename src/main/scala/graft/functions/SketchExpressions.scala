@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
@@ -419,50 +418,7 @@ case class CountInSet(child: Expression, set: Array[org.apache.spark.unsafe.type
 
 object SketchExpressions {
 
-  /** Idempotent registration of all native text/sketch expressions. */
-  def register(spark: SparkSession): Unit = {
-    CharRollingHash.register(spark)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (children: Seq[Expression]) => MinHashSig(children.head)
-    )
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("simhash32"),
-      new ExpressionInfo(classOf[SimHash32].getName, "simhash32"),
-      (children: Seq[Expression]) => SimHash32(children.head)
-    )
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (children: Seq[Expression]) => VecDot(children(0), children(1))
-    )
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("word_ngram_hashes"),
-      new ExpressionInfo(classOf[WordNgramHashes].getName, "word_ngram_hashes"),
-      (children: Seq[Expression]) =>
-        children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(n: Int, _) =>
-            WordNgramHashes(children(0), n)
-          case other =>
-            throw new IllegalArgumentException(
-              s"word_ngram_hashes: n must be an INT literal, got $other")
-        }
-    )
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("count_in_set"),
-      new ExpressionInfo(classOf[CountInSet].getName, "count_in_set"),
-      (children: Seq[Expression]) => {
-        val setExpr = children(1)
-        require(setExpr.foldable,
-          s"count_in_set: the set must be a literal string array, got $setExpr")
-        val arr = setExpr.eval().asInstanceOf[ArrayData]
-        val set = (0 until arr.numElements()).map { i =>
-          require(!arr.isNullAt(i), "count_in_set: set elements must be non-null")
-          arr.getUTF8String(i).clone()
-        }.toArray
-        CountInSet(children.head, set)
-      }
-    )
-  }
+  /** Idempotent registration of every native function; see
+    * [[graft.plans.GraftExtensions.install]]. */
+  def register(spark: SparkSession): Unit = graft.plans.GraftExtensions.install(spark)
 }

@@ -49,9 +49,7 @@ object GroupedTopK {
   def topK(df: DataFrame, keyCols: Seq[String], order: Seq[Column], k: Int): DataFrame = {
     require(k > 0, "k must be positive")
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[GroupedTopKStrategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ new GroupedTopKStrategy
+    GraftExtensions.install(spark)
     val sortOrders = order.map { c =>
       org.apache.spark.sql.graft.shims.expression(c) match {
         case so: SortOrder => so

@@ -97,7 +97,6 @@ object CurationQueries {
     // is the OOM risk, same reasoning as t_boilerplate_chunks); output
     // is O(#sources).
     "t_span_dedup" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s)
       val docs = table(s, dir, "documents").select(col("doc_id"), col("source"), col("text"))
       val planted = docs
         .filter(col("doc_id") % 11 === 0)
@@ -151,7 +150,6 @@ object CurationQueries {
     // map-side heaps, one shuffle on source) — no global or per-source
     // sort ever materializes.
     "t_weighted_sample" -> ((s, dir) => {
-      graft.functions.CharRollingHash.register(s)
       val pri = table(s, dir, "documents")
         .withColumn("u", expr("char_rolling_hash(text) % 1000003 + 1"))
         .withColumn("key_e6", expr("(u * 1000000) div n_chars"))
@@ -206,7 +204,6 @@ object CurationQueries {
     // the same scheme recurses on a finer sub-bucket — the histogram
     // trick composes.) Output is one summary row.
     "t_token_budget_select" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s) // qualitySpark -> count_in_set
       val budget = 20000L
       val d = table(s, dir, "documents")
         .withColumn("ws", split(col("text"), " "))
@@ -268,7 +265,6 @@ object CurationQueries {
     // ((cum_excl·10) div total) — deterministic, no per-doc window, no
     // percent_rank sort over the corpus. Output is O(sources × 10).
     "t_quality_calibration" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s) // qualitySpark -> count_in_set
       val d = table(s, dir, "documents")
         .withColumn("ws", split(col("text"), " "))
         .withColumn("q", expr(TextQueries.qualitySpark))
@@ -316,7 +312,6 @@ object CurationQueries {
     // exchange is the O(sources) final groupBy. At 100 TB this is a pure
     // map-side scan — the ideal shape for classifier-filter passes.
     "t_quality_lr_score" -> ((s, dir) => {
-      graft.functions.CharRollingHash.register(s)
       table(s, dir, "documents")
         .withColumn("ws", split(col("text"), " "))
         .withColumn(
@@ -371,7 +366,6 @@ object CurationQueries {
     // t_bpe_train_merges no-collect loop). At 100 TB: 6 linear scans of
     // a 6-column integer frame, six 1-row exchanges, zero driver loops.
     "t_quality_lr_fit" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s) // quality/stopCount -> count_in_set
       import org.apache.spark.sql.DataFrame
       val feats = table(s, dir, "documents")
         .withColumn("ws", split(col("text"), " "))

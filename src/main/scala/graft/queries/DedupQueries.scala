@@ -84,7 +84,6 @@ object DedupQueries {
     * of ~3× inside concatenated shingle strings.
     */
   private def wordHashes(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.SketchExpressions.register(s)
     corpus(s, dir)
       .withColumn("ws", split(col("text"), " "))
       .select(col("doc_id"), expr("transform(ws, w -> char_rolling_hash(w))").as("wh"))
@@ -102,7 +101,6 @@ object DedupQueries {
     * incremental-dedup query needs the SAME feature pipeline on its
     * corpus and batch sides separately. */
   private def hashedSetsOf(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.SketchExpressions.register(s)
     docs
       // r14 OPTIMIZATION: the word-hash transform + let-bound n-gram
       // fold lambdas (CodegenFallback higher-order builtins — they
@@ -338,58 +336,10 @@ object DedupQueries {
     verifyJaccard(cand, sets)
   }
 
-  /** Min-label propagation over an undirected edge list (a, b) →
-    * connected-component representative per node: (id, rep). Each round
-    * is a join+groupBy; the fixpoint test is a 1-row aggregate (label
-    * sum is strictly decreasing until convergence) — no driver-side
-    * graph, rounds bounded by component diameter. Nodes with no edges
-    * are NOT emitted (callers coalesce to self).
-    *
-    * Superseded in the registered queries by [[starContract]] (same
-    * output, O(log² n) rounds instead of diameter); retained as the
-    * independent reference implementation StarContractSpec A/Bs against.
-    */
-  private[graft] def labelPropagate(edges: DataFrame): DataFrame = {
-    val adj = edges.unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-    // init fused with round 1: rep = min(self, min neighbor) — one
-    // aggregate instead of a distinct + a join round
-    var labels = adj
-      .groupBy(col("a"))
-      .agg(least(col("a"), min(col("b"))).as("rep"))
-      .select(col("a").as("id"), col("rep"))
-      .localCheckpoint()
-    // ADVICE r5: on an empty edge set sum(rep) aggregates to NULL —
-    // read it null-safely and return the (empty) labels frame at once
-    // instead of NPE-ing in getLong. A corpus with no near-dup pairs is
-    // a legal input to every caller (clusters, triangles, split).
-    def repSum(): Long = {
-      val row = labels.agg(sum(col("rep"))).first()
-      if (row.isNullAt(0)) Long.MinValue else row.getLong(0)
-    }
-    var prevSum = Long.MaxValue
-    var curSum = repSum()
-    while (curSum != Long.MinValue && curSum < prevSum) {
-      val nbrMin = adj
-        .join(labels, adj("b") === labels("id"))
-        .groupBy(adj("a").as("nid"))
-        .agg(min(col("rep")).as("nrep"))
-      labels = labels
-        .join(nbrMin, labels("id") === nbrMin("nid"), "left")
-        .select(
-          col("id"),
-          least(col("rep"), coalesce(col("nrep"), col("rep"))).as("rep")
-        )
-        .localCheckpoint()
-      prevSum = curSum
-      curSum = repSum()
-    }
-    labels
-  }
-
   /** Connected components via alternating LARGE-STAR / SMALL-STAR
     * contraction (Kiveris et al., "Connected Components in MapReduce and
     * Beyond", SoCC '14 — public algorithm) — the web-scale answer the
-    * [[labelPropagate]] scaladoc promised (VERDICT r12 #4). Identical
+    * min-label-propagation scaladoc promised (VERDICT r12 #4). Identical
     * (id, rep) output contract (every node incident to an edge, rep =
     * component min, the min node mapping to itself; isolated nodes not
     * emitted), but rounds are O(log² n) on ANY graph shape, where
@@ -399,12 +349,13 @@ object DedupQueries {
     * rounds at 100 TB while this loop closes it in ~a dozen.
     * StarContractSpec proves both properties on a planted 4096-node path
     * (diameter 4095, ≤ 16 alternations) and equality with
-    * labelPropagate on the real LSH pair graph.
+    * the min-label-propagation reference (test sources,
+    * `DedupReference.labelPropagate`) on the real LSH pair graph.
     *
     * Output contract: (id, rep) labels for every node incident to at
     * least one NON-self-loop edge. Input self-loops are dropped at
     * canonicalization, so a node appearing ONLY in self-loop edges is
-    * not emitted — [[labelPropagate]] would emit it with rep = itself
+    * not emitted — label propagation would emit it with rep = itself
     * (ADVICE r13 drift note). Both current call sites build edges from
     * verified pairs with doc_a < doc_b, so that input class is
     * unreachable here; a future caller feeding raw (possibly-reflexive)
@@ -618,7 +569,6 @@ object DedupQueries {
     * materializes the features before multi-consumer fan-out).
     */
   private[graft] def docFeaturesOf(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.SketchExpressions.register(s)
     docs
       .withColumn("d1", expr("char_rolling_hash(text)"))
       .withColumn("d2", expr("char_rolling_hash(reverse(text))"))
@@ -1385,7 +1335,6 @@ object DedupQueries {
     // the min-id tie-break always keeps the original — asserted in
     // DedupSpec.
     "d_quality_keeper" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s) // qualitySpark -> count_in_set
       // no checkpoint: starContract is the only consumer (see
       // d_dup_clusters — its canonicalize step materializes immediately)
       val edges = lshVerifiedPairs(s, dir)
@@ -1421,7 +1370,6 @@ object DedupQueries {
     // different splits — zero by construction, and the oracle recomputes
     // the same zero from the exact pair set.
     "d_leakage_safe_split" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s)
       val edges = lshVerifiedPairs(s, dir)
         .select(col("doc_a"), col("doc_b"))
         .localCheckpoint()
@@ -1457,7 +1405,6 @@ object DedupQueries {
     // SimHash near-dup: 32-bit fingerprints, 4-byte pigeonhole band join
     // (exact for hamming ≤ 3), then the distance itself.
     "d_simhash_pairs" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s)
       // TWO simhash passes over the same checkpointed hashed-shingle
       // sets: the shingle hashes live in [0, P) = 30 effective bits, so
       // a single simhash32 carries 30 fingerprint bits and hamming-≤3

@@ -190,7 +190,6 @@ object EmbeddingQueries {
 
   /** vectors as DOUBLE arrays + squared norm. */
   private def vecs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.SketchExpressions.register(s)
     table(s, dir, "embeddings")
       .select(
         col("vec_id"),
@@ -207,7 +206,6 @@ object EmbeddingQueries {
     * every 20th vector (planted pairs at cosine ≥ 0.97; natural max ~0.51).
     */
   private[graft] def nearCorpus(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.SketchExpressions.register(s)
     val base = table(s, dir, "embeddings")
       .select(
         col("vec_id"),
@@ -594,10 +592,6 @@ object EmbeddingQueries {
     // sum/count per (cid, dim) — no ordered folds, no collect — and the
     // assignment is a broadcast-centroid argmax identical to e_ivf_topk's.
     "e_kmeans_ivf_topk" -> ((s, dir) => {
-      // register vec_dot BEFORE the first eager-analyzed expr below —
-      // standalone invocation must not depend on an earlier query having
-      // registered it in the shared session (latent-bug fix, round 5)
-      graft.functions.SketchExpressions.register(s)
       // quantized corpus: qvi exact BIGINT, qv = same values as DOUBLE
       // (64 dims × (2^20)^2 ≤ 2^46 keeps dot products overflow-safe)
       val vec = table(s, dir, "embeddings")
@@ -2499,8 +2493,9 @@ object EmbeddingQueries {
          |FROM r WHERE rn = 1 ORDER BY dropped_id""".stripMargin
     },
     // Exact ground truth — the LSH+verify path must reproduce it. The
-    // n²/2 scan IS the deliberately-exact shape; two r14 re-plans make
-    // it feasible at full sf10:
+    // n²/2 scan IS the deliberately-exact shape; two r14 re-plans aim at
+    // full sf10 (no full-sf10 run is committed; see
+    // results/sweep_r14_evidence.txt):
     // 1. DuckDB's native `array_inner_product` over `DOUBLE[64]`
     //    fixed-size arrays replaces the unrolled dotDuck64 — measured
     //    BIT-IDENTICAL to the left-assoc fold (max raw |Δ| = 0.0 over

@@ -403,7 +403,7 @@ object LakehouseQueries {
     // max-lines-per-order (≤7 in TPC-H shape — the bounded analog of
     // the dedup tier's DF cap); each iteration is one join (messages
     // along edges) + one groupBy (sum per target), lineage cut per
-    // round (localCheckpoint, same discipline as labelPropagate's
+    // round (localCheckpoint, same discipline as starContract's
     // fixpoint); no per-vertex driver state. Every node has degree ≥ 1
     // by construction, so there is no dangling-mass correction term.
     "o_pagerank_copurchase" -> ((s, dir) => {

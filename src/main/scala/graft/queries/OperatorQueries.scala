@@ -324,7 +324,6 @@ object OperatorQueries {
     // superset/soundness property and that the prune actually dropped
     // rows ahead of the join.
     "o_bloom_pruned_join" -> ((s, dir) => {
-      graft.functions.BloomFunctions.register(s)
       val sel = table(s, dir, "orders")
         .filter(col("o_orderdate").between("1996-03-01", "1996-03-31"))
         .select(col("o_orderkey"), col("o_orderpriority"))

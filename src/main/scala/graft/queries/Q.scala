@@ -109,7 +109,7 @@ object Q {
     * naive-timestamp reading byte-for-byte (confirmed by the r7 sf0.01
     * oracle sweep, 109/0). If any session ever un-pins UTC, that
     * coercion — and this whole oracle-parity scheme — breaks; the UTC
-    * pin in Bench/Verify/SparkSpecBase is load-bearing, not cosmetic.
+    * pin in GraftSession is load-bearing, not cosmetic.
     */
   def events(s: SparkSession, dir: String): DataFrame =
     normalizeEventTs(table(s, dir, "events"))

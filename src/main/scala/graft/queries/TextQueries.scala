@@ -39,8 +39,7 @@ object TextQueries {
   /** Stopword count over a word-array column `ws` (feature input for the
     * quality classifier pair in [[CurationQueries]]). r14: the
     * size(filter(...array_contains...)) lambda became the native codegen
-    * count_in_set (CountInSetSpec proves equality; callers must register
-    * SketchExpressions).
+    * count_in_set (CountInSetSpec proves equality).
     */
   private[queries] def stopCountSpark =
     s"count_in_set(ws, $stopArr)"
@@ -67,7 +66,6 @@ object TextQueries {
       s: org.apache.spark.sql.SparkSession,
       dir: String
   ): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    graft.functions.SketchExpressions.register(s)
     val docs = table(s, dir, "documents").select(col("doc_id"), col("text"))
     val test0 = docs.filter(col("doc_id") % 50 === 0)
     val plant = docs
@@ -120,7 +118,6 @@ object TextQueries {
     // Quality scoring: length/stopword/diversity signals → one score.
     // All ratios are integer-count divisions rounded to 6 — portable.
     "t_quality_scores" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s)
       table(s, dir, "documents")
         .withColumn("ws", split(col("text"), " "))
         .select(
@@ -143,7 +140,6 @@ object TextQueries {
     // language size(filter(...)) lambda stacks became native count_in_set
     // loops (CountInSetSpec; the oracle mirrors the lambda form).
     "t_lang_id" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s)
       table(s, dir, "documents")
         .withColumn("ws", split(col("text"), " "))
         .withColumn("s_en", expr(s"count_in_set(ws, $stopArr)"))
@@ -167,7 +163,6 @@ object TextQueries {
     // via the native codegen expression (CharRollingHashSpec proves it
     // bit-equal to the higher-order-builtin formulation the oracle mirrors).
     "t_fingerprints" -> ((s, dir) => {
-      graft.functions.CharRollingHash.register(s)
       table(s, dir, "documents")
         .select(col("doc_id"), expr("char_rolling_hash(text)").as("fingerprint"))
         .orderBy("doc_id")
@@ -236,7 +231,6 @@ object TextQueries {
     // contaminated-fraction selectivity the shuffle carries only the
     // pruned sliver.
     "t_bloom_decontaminate" -> ((s, dir) => {
-      graft.functions.BloomFunctions.register(s)
       val (train, test0) = contaminatedTrainTest(s, dir)
       // testNg has two consumers (bloom build + verify join) but the
       // held-out set is small by construction — re-hashing it is cheaper
@@ -272,7 +266,6 @@ object TextQueries {
     // count_distinct for approx_count_distinct if the surviving-text
     // cardinality exceeds driver memory for the exact path.
     "t_curation_funnel" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s) // qualitySpark → count_in_set
       val docs = table(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
       val cor = docs.unionAll(
         docs
@@ -348,7 +341,6 @@ object TextQueries {
     // text itself is returned as its rolling-hash fingerprint so the
     // result stays narrow.
     "t_pii_redact" -> ((s, dir) => {
-      graft.functions.CharRollingHash.register(s)
       // `[.]` not `\.`: Spark SQL string literals eat backslash escapes
       // (so '\.' would reach the regex engine as bare '.'), DuckDB's
       // don't — the bracket class is identical in both.
@@ -400,7 +392,6 @@ object TextQueries {
     // still run first — split assignment is per-byte-content only).
     // Embarrassingly parallel: one codegen projection, one tiny agg.
     "t_hash_split" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s)
       table(s, dir, "documents")
         .select(
           col("doc_id"),
@@ -436,7 +427,6 @@ object TextQueries {
     // reproducible and the oracle sees the identical subset. One scan,
     // no shuffle until the tiny per-lang aggregate.
     "t_stratified_sample" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s)
       table(s, dir, "documents")
         .withColumn("hh", expr("char_rolling_hash(text)") % 1000)
         .filter(
@@ -460,7 +450,6 @@ object TextQueries {
     // chunk text rides the same slice, fingerprinted here so the output
     // stays narrow and the oracle exact.
     "t_chunk_plan" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s)
       table(s, dir, "documents")
         .select(
           col("doc_id"),
@@ -809,7 +798,6 @@ object TextQueries {
     // identical filter+rank, so determinism never depends on the margin
     // being sufficient.
     "t_mixture_sampling" -> ((s, dir) => {
-      graft.functions.CharRollingHash.register(s)
       val docs = table(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"),
           expr("char_rolling_hash(text)").as("h"))
@@ -896,7 +884,6 @@ object TextQueries {
     // later query. The exchange floor is cheaper than the pin at every
     // scale that matters.
     "t_source_novelty" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s)
       // r14: fused codegen n-gram hashing (see hashedSetsOf / NgramHashSpec)
       val spans = table(s, dir, "documents")
         .withColumn("g", expr("array_distinct(word_ngram_hashes(split(text, ' '), 8))"))
@@ -942,7 +929,6 @@ object TextQueries {
     // recompute-twice replacement (298 s — the (doc, b) shuffle itself
     // was the cost, not the checkpoint).
     "t_dsir_importance" -> ((s, dir) => {
-      graft.functions.SketchExpressions.register(s)
       // r14: unigram ∪ bigram features via the fused codegen
       // word_ngram_hashes expression — n=1 IS the word-hash array for
       // the never-empty split output (split always yields ≥ 1 element,

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{CharRollingHash, TextFeatures}
+import graft.functions.{SketchExpressions, TextFeatures}
 
 /** The native codegen expression must agree byte-for-byte with the
   * higher-order-builtin formulation it replaces (ASCII corpus contract).
@@ -10,7 +10,7 @@ import graft.functions.{CharRollingHash, TextFeatures}
 class CharRollingHashSpec extends SparkSpecBase {
 
   test("native expression equals the higher-order builtin hash") {
-    CharRollingHash.register(spark)
+    SketchExpressions.register(spark)
     val diff = spark.read
       .parquet(s"$Sf0001/documents.parquet")
       .select(
@@ -23,7 +23,7 @@ class CharRollingHashSpec extends SparkSpecBase {
   }
 
   test("null-safe and empty-string behavior") {
-    CharRollingHash.register(spark)
+    SketchExpressions.register(spark)
     val session = spark
     import session.implicits._
     val out = Seq("", "a", null).toDF("s")

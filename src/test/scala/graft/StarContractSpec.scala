@@ -30,7 +30,7 @@ class StarContractSpec extends SparkSpecBase {
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
       .localCheckpoint()
     val star = labelsOf(DedupQueries.starContract(edges))
-    val prop = labelsOf(DedupQueries.labelPropagate(edges))
+    val prop = labelsOf(DedupReference.labelPropagate(edges))
     assert(star == prop,
       s"star contraction diverges from label propagation on " +
         s"${(star.toSet -- prop.toSet).take(5)} vs ${(prop.toSet -- star.toSet).take(5)}")
